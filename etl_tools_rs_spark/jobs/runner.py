@@ -14,7 +14,9 @@ Reference parity (etl-job/src/job.rs:27-643):
 
 Engine semantics (clean, per SURVEY §7.4): ok = parsed rows, err = corrupt
 rows; stats finalize only after the sink action returns (§4.3). The pump
-loop / channels collapse into one Spark action per step.
+loop / channels collapse into two Spark actions per ``run_stream`` step:
+one accounting aggregate over the cached, parsed frame (ok/err and
+per-file counts, then the error-budget check), then the sink write.
 """
 
 from __future__ import annotations
@@ -37,7 +39,12 @@ from etl_tools_rs_spark.jobs.state import (
     StepStatus,
 )
 from etl_tools_rs_spark.sinks.simple_store import SimpleStore
-from etl_tools_rs_spark.sources.files import CORRUPT_COL, SOURCE_COL, split_ok_err
+from etl_tools_rs_spark.sources.files import (
+    SOURCE_COL,
+    error_markers,
+    is_error_row,
+    split_ok_err,
+)
 
 
 class JobRunnerError(Exception):
@@ -167,35 +174,45 @@ class JobRunner:
         sink: Any,
         count_by_source: bool = True,
     ) -> StepStatus | None:
-        """Source→sink step: split ok/corrupt, enforce the error budget,
-        write ok rows, record per-file + total stats, mark Complete.
+        """Source→sink step: count ok/corrupt rows, enforce the error
+        budget, write ok rows, record per-file + total stats, mark Complete.
 
-        One extra action computes counts (cache bounds the recompute);
-        the sink write is the main action. Stats finalize after the write
-        returns (sink-acknowledged, SURVEY §4.3)."""
+        Two Spark actions. The accounting action is one aggregate over the
+        cached, parsed frame: ``count(*)`` and the error count per
+        ``_source`` file (one global row when ``count_by_source`` is off or
+        the frame has no ``_source``). The budget is checked on its result,
+        so a breach raises before the sink writes anything. The sink write
+        then reads the cache. Stats finalize after the write returns
+        (sink-acknowledged, SURVEY §4.3)."""
         step = self._skip_or_start(name, "stream")
         if step is None:
             return None
-        # cache the PARSED frame: (a) the ok/err/per-file counts and the sink
-        # write reuse one scan+parse; (b) Spark disallows counting only the
-        # corrupt column straight off a raw file scan
+        # cache the PARSED frame: (a) the accounting aggregate and the sink
+        # write reuse one scan+parse; (b) Spark disallows a query that
+        # reads only the corrupt column straight off a raw file scan
         # (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the cache boundary is the
         # documented remedy
         df = df.cache()
-        ok, err = split_ok_err(df)
+        ok, _ = split_ok_err(df)
+        by_source = count_by_source and SOURCE_COL in df.columns
         try:
-            n_err = err.count()
+            counts = (
+                (df.groupBy(SOURCE_COL) if by_source else df.groupBy())
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_if(is_error_row(df)).alias("n_err"),
+                )
+                .collect()
+            )
+            n_err = sum(r["n_err"] for r in counts)
             self.num_errors += n_err
             step.num_errors = n_err
             self._check_budget(step)
-            if count_by_source and SOURCE_COL in df.columns:
-                per_file = (
-                    df.groupBy(SOURCE_COL).agg(F.count(F.lit(1)).alias("n")).collect()
-                )
-                step.inputs = {r[SOURCE_COL]: r["n"] for r in per_file}
-            n_ok = ok.count()
-            step.total_lines_scanned = n_ok + n_err
-            out_df = ok.drop(SOURCE_COL) if SOURCE_COL in ok.columns else ok
+            if by_source:
+                step.inputs = {r[SOURCE_COL]: r["n"] for r in counts}
+            step.total_lines_scanned = sum(r["n"] for r in counts)
+            n_ok = step.total_lines_scanned - n_err
+            out_df = ok.drop(SOURCE_COL)
             result = sink.write(out_df)
             written = result if isinstance(result, int) and result >= 0 else n_ok
             step.outputs[getattr(sink, "path", type(sink).__name__)] = written
@@ -255,7 +272,9 @@ class JobRunner:
         try:
             work = work.cache()  # same corrupt-column caveat as run_stream
             ok, err = split_ok_err(work)
-            n_err = err.count()
+            # no marker column → split_ok_err's err side is empty by
+            # construction; counting it would still launch a Spark job
+            n_err = err.count() if error_markers(work) else 0
             self.num_errors += n_err
             step.num_errors = n_err
             self._check_budget(step)

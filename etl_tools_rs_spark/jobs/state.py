@@ -12,12 +12,14 @@ Reference parity (etl-job/src/job/state.rs:1-408):
 
 Stats shape mirrors StepStreamStatus (etl-job/src/job/stream.rs:6-32):
 started/finished timestamps, total_lines_scanned, num_errors, per-input
-file counts (stream.rs:266-308), outputs.
+file counts (stream.rs:266-308), outputs. ``duration_s`` (engine addition)
+is the step's wall time from a monotonic clock, start to Complete/Error.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -47,6 +49,7 @@ class StepStatus:
     inputs: dict[str, int] = field(default_factory=dict)  # per-source-file counts
     outputs: dict[str, int] = field(default_factory=dict)  # sink name → lines written
     error: str | None = None
+    duration_s: float | None = None  # monotonic, start → Complete/Error
 
     def to_dict(self) -> dict[str, Any]:
         return dict(self.__dict__)
@@ -66,6 +69,7 @@ class JobState:
         self.settings: dict[str, Any] = {}
         self.step_history: dict[str, StepStatus] = {}
         self.cur_step_index = 0  # monotonically increasing (state.rs / SURVEY §4.3)
+        self._started: dict[str, float] = {}  # step name → time.monotonic() at start
 
     # -- file contract ------------------------------------------------------
     @property
@@ -94,20 +98,24 @@ class JobState:
     def start_step(self, name: str, kind: str = "stream") -> StepStatus:
         st = StepStatus(name=name, step_index=self.cur_step_index, kind=kind)
         self.step_history[name] = st
+        self._started[name] = time.monotonic()
+        return st
+
+    def _finish(self, name: str, status: str) -> StepStatus:
+        st = self.step_history[name]
+        st.status = status
+        st.finished = _now()
+        t0 = self._started.pop(name, None)
+        if t0 is not None:
+            st.duration_s = time.monotonic() - t0
+        self.cur_step_index += 1
         return st
 
     def complete_step(self, name: str) -> None:
-        st = self.step_history[name]
-        st.status = "Complete"
-        st.finished = _now()
-        self.cur_step_index += 1
+        self._finish(name, "Complete")
 
     def error_step(self, name: str, message: str) -> None:
-        st = self.step_history[name]
-        st.status = "Error"
-        st.error = message
-        st.finished = _now()
-        self.cur_step_index += 1
+        self._finish(name, "Error").error = message
 
     def advance_skipped(self) -> None:
         """A skipped (already-complete) step still advances the index so

@@ -25,7 +25,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
-ERROR_COL = "_error"
+from etl_tools_rs_spark.sources.files import ERROR_COL
 
 
 def transform(

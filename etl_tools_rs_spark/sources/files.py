@@ -34,11 +34,12 @@ import os
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 SOURCE_COL = "_source"
 CORRUPT_COL = "_corrupt_record"
+ERROR_COL = "_error"  # set by operators.transform.with_error_column
 
 
 @dataclass
@@ -203,25 +204,34 @@ class FileSource:
         return df
 
 
-ERROR_COL = "_error"
+def error_markers(df: DataFrame) -> list[str]:
+    """The in-band error columns ``df`` carries: ``_corrupt_record``
+    (decode failures from PERMISSIVE parsing) and/or ``_error`` (transform
+    failures from operators.transform.with_error_column)."""
+    return [c for c in (CORRUPT_COL, ERROR_COL) if c in df.columns]
+
+
+def is_error_row(df: DataFrame) -> Column:
+    """The one "is error row" predicate: any error marker is set. Literal
+    False when ``df`` carries no marker. ``split_ok_err`` and the
+    JobRunner's accounting aggregate both use it, so the ok/err split and
+    the recorded counts cannot drift apart."""
+    pred = F.lit(False)
+    for m in error_markers(df):
+        pred = pred | F.col(m).isNotNull()
+    return pred
 
 
 def split_ok_err(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a frame into (ok_rows, error_rows) — the engine's clean
     definition of the reference's per-record lines_scanned / num_errors
-    accounting (SURVEY §7.4). Error rows are decode failures
-    (``_corrupt_record`` from PERMISSIVE parsing) and/or transform
-    failures (``_error`` from operators.transform.with_error_column) —
-    both in-band, both counted against the budget."""
-    markers = [c for c in (CORRUPT_COL, ERROR_COL) if c in df.columns]
+    accounting (SURVEY §7.4). Both error kinds in ``error_markers`` are
+    in-band and both count against the budget."""
+    markers = error_markers(df)
     if not markers:
         return df, df.limit(0)
-    is_err = F.lit(False)
-    for m in markers:
-        is_err = is_err | F.col(m).isNotNull()
-    ok = df.filter(~is_err).drop(*markers)
-    err = df.filter(is_err)
-    return ok, err
+    is_err = is_error_row(df)
+    return df.filter(~is_err).drop(*markers), df.filter(is_err)
 
 
 def list_files(prefix: str, regex: str | None = None, glob: str | None = None) -> list[str]:

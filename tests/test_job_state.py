@@ -69,3 +69,34 @@ def test_local_fs_store_atomic(tmp_path):
 def test_step_status_from_dict_ignores_unknown():
     st = StepStatus.from_dict({"name": "x", "step_index": 2, "future_field": 1})
     assert st.name == "x" and st.step_index == 2
+
+
+def test_step_duration_recorded_and_persisted():
+    store = MemoryStore()
+    js = JobState("id4", "dur")
+    js.start_step("ok")
+    js.complete_step("ok")
+    js.start_step("bad")
+    js.error_step("bad", "boom")
+    for name in ("ok", "bad"):
+        d = js.step_history[name].duration_s
+        assert d is not None and 0 <= d < 60
+    js.save(store)
+    js2 = JobState.load_or_new(store, "id4", "dur")
+    assert js2.step_history["ok"].duration_s == js.step_history["ok"].duration_s
+
+
+def test_old_document_without_duration_loads():
+    store = MemoryStore()
+    store.write(
+        "id5.old.job.json",
+        {
+            "run_status": "Completed",
+            "step_history": {
+                "load": {"name": "load", "step_index": 0, "status": "Complete",
+                         "total_lines_scanned": 3}
+            },
+        },
+    )
+    st = JobState.load_or_new(store, "id5", "old").step_history["load"]
+    assert st.duration_s is None and st.total_lines_scanned == 3

@@ -115,3 +115,81 @@ def test_run_stream_file_to_file(spark, fixture_dir, tmp_path):
     assert "_corrupt_record" not in back.columns
     assert "_source" not in back.columns  # engine columns stripped at the sink
     assert step.total_lines_scanned == 10 and step.num_errors == 1
+
+
+def test_budget_breach_writes_nothing(spark, tmp_path):
+    # the budget is checked on the accounting aggregate, before the sink
+    # write: a breached step leaves no output behind
+    from etl_tools_rs_spark.sinks.files import FileSink
+
+    jr = JobRunner("j7", "breach", MemoryStore(), max_errors=1)
+    df = JsonLinesSource(F1_LINES, schema=F1_SCHEMA).to_df(spark)  # 3 ok / 2 err
+    out_path = tmp_path / "out"
+    with pytest.raises(TooManyErrors):
+        jr.run_stream("load", df, FileSink(str(out_path), format="parquet"))
+    assert not out_path.exists()
+    assert jr.state.step_history["load"].status == "Error"
+
+
+def _write_lines(path, lines):
+    path.write_text("".join(line + "\n" for line in lines))
+    return str(path)
+
+
+def test_run_stream_per_file_counts_with_all_corrupt_file(spark, tmp_path):
+    good = _write_lines(
+        tmp_path / "good.ndjson",
+        [f'{{"index": "{i}", "words": "w{i}"}}' for i in range(4)]
+        + ["not json at all"],
+    )
+    bad = _write_lines(tmp_path / "bad.ndjson", ["{broken", "also broken", "{{"])
+    df = FileSource([good, bad], format="json", schema="index string, words string").to_df(spark)
+    jr = JobRunner("j8", "two_files", MemoryStore())
+    step = jr.run_stream("load", df, NoopSink())
+    by_name = {k.rsplit("/", 1)[-1]: v for k, v in step.inputs.items()}
+    assert by_name == {"good.ndjson": 5, "bad.ndjson": 3}
+    assert step.num_errors == 1 + 3
+    assert step.total_lines_scanned == 8
+    assert sum(step.outputs.values()) == 4
+
+
+@pytest.mark.parametrize("count_by_source", [True, False])
+def test_run_stream_empty_input_zero_counts(spark, tmp_path, count_by_source):
+    empty = _write_lines(tmp_path / "empty.ndjson", [])
+    df = FileSource([empty], format="json", schema="index string, words string").to_df(spark)
+    jr = JobRunner("j9", "empty", MemoryStore())
+    step = jr.run_stream("load", df, NoopSink(), count_by_source=count_by_source)
+    assert (step.total_lines_scanned, step.num_errors, step.inputs) == (0, 0, {})
+    assert sum(step.outputs.values()) == 0
+    assert step.status == "Complete"
+
+
+def test_run_stream_without_per_file_counts(spark, fixture_dir):
+    df = FileSource(
+        [str(fixture_dir / "10_lines.ndjson")],
+        format="json",
+        schema="index string, words string",
+    ).to_df(spark)
+    jr = JobRunner("j10", "global", MemoryStore())
+    step = jr.run_stream("load", df, NoopSink(), count_by_source=False)
+    assert step.inputs == {}
+    assert (step.total_lines_scanned, step.num_errors) == (10, 1)
+    assert sum(step.outputs.values()) == 9
+
+
+def test_run_stream_spark_job_count(spark, fixture_dir, tmp_path):
+    # job-count pin: a FileSource → FileSink step runs the accounting
+    # aggregate (2 jobs: its shuffle map stage, then the result stage)
+    # plus the write (2 jobs) and nothing else
+    from etl_tools_rs_spark.sinks.files import FileSink
+
+    df = FileSource(
+        [str(fixture_dir / "10_lines.ndjson")],
+        format="json",
+        schema="index string, words string",
+    ).to_df(spark)
+    jr = JobRunner("j11", "jobs", MemoryStore())
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup())
+    jr.run_stream("load", df, FileSink(str(tmp_path / "out"), format="parquet"))
+    assert len(set(st.getJobIdsForGroup()) - before) == 4
